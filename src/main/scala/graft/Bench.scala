@@ -77,11 +77,9 @@ object Bench {
       // steady-state is ~30 s — see NOTES_DEV)
       "minhash_synth1m" -> (s => Workloads.dedupSynth(s, 1_000_000L)),
       // scale-evidence twin for the GRAPH family: forced-distributed
-      // PageRank (10 BSP rounds of out-degree join + contribution
-      // shuffle) over 10M in-engine edges / 1M nodes with hub skew —
-      // ~100x the sf0.1 relational graphs (~29 s; scales gently from
-      // 2M edges at ~21 s: the round loop, not the edge volume, is
-      // the local-mode floor a real cluster overlaps away)
+      // PageRank (10 BSP rounds, one shuffle each, over CSR blocks
+      // built once) over 10M in-engine edges / 1M nodes with hub skew —
+      // ~100x the sf0.1 relational graphs
       "pagerank_synth10m" -> ((s: SparkSession) =>
         Workloads.pagerankSynth(s, 10_000_000L, 1_000_000L)),
       // scale-evidence twin for the SIMILARITY family: IVF build (Lloyd
@@ -456,15 +454,15 @@ object Bench {
     }.mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"diagnostics":$diag,"ref_datasets":$refDatasetJson,"graph_ann":$graphAnnJson,"adjudicated":$adjJson,"failed":$failed,"sf":"$sfDir"}"""
-    // Persist the full map to a committed PER-CPU-COUNT file (the round
-    // driver's 8-core run used to clobber the 32-core artifact) and keep
-    // writing the legacy single-file name for older readers — but only
-    // on a full, non-overridden run: a focused SPARK_GRAFT_BENCH_ONLY /
-    // custom-out iteration must not overwrite the committed artifact
-    // with a partial map.
-    val writeLegacy = only.isEmpty && !sys.env.contains("SPARK_GRAFT_BENCH_OUT")
-    for (out <- (if (writeLegacy) Seq(fullOut, legacyOut) else Seq(fullOut))
-        .distinct)
+    // Persist the full map to a committed PER-CPU-COUNT file (the 8-core
+    // run used to clobber the 32-core artifact) and keep writing the
+    // legacy single-file name for older readers. A focused
+    // SPARK_GRAFT_BENCH_ONLY run writes neither committed file — its map is
+    // partial — only an explicitly named SPARK_GRAFT_BENCH_OUT.
+    val customOut = sys.env.contains("SPARK_GRAFT_BENCH_OUT")
+    val outs = (if (only.isEmpty || customOut) Seq(fullOut) else Nil) ++
+      (if (only.isEmpty && !customOut) Seq(legacyOut) else Nil)
+    for (out <- outs.distinct)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), full + "\n")
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] could not write $out: ${e.getMessage}")
@@ -478,7 +476,7 @@ object Bench {
     // with only a top10 here), and the committed files carry the same
     // map as a durable copy.
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"n_queries":${results.size},"n_failed":${results.count(_._2 < 0)},"n_diag_failed":${diagResults.count(_._2 < 0)},"n_adjudicated":${adjudicated.size},"failed":$failed,"queries":$qs,"top10":$top10,"diagnostics":$diag,"full":"$fullOut","sf":"$sfDir"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"n_queries":${results.size},"n_failed":${results.count(_._2 < 0)},"n_diag_failed":${diagResults.count(_._2 < 0)},"n_adjudicated":${adjudicated.size},"failed":$failed,"queries":$qs,"top10":$top10,"diagnostics":$diag,"full":"${outs.headOption.getOrElse("")}","sf":"$sfDir"}""")
     spark.stop()
   }
 }

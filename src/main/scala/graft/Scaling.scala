@@ -78,7 +78,7 @@ object Scaling {
       // its exact-ratio jaccard) must be identical at every core count
       "minhash_synth1m" -> (s => Workloads.dedupSynth(s, 1_000_000L)),
       // BSP-loop family (q58d's shape, forced-distributed): 10 rounds
-      // of out-degree join + contribution shuffle over 1M edges. Ranks
+      // of one message shuffle each over 1M edges. Ranks
       // round to 8 decimals — the same absorber q58d's oracle uses for
       // double-sum association noise; at that precision the sweep must
       // fingerprint bit-equal

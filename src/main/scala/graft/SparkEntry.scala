@@ -988,8 +988,8 @@ object SparkEntry {
 
     // Graph: PageRank centrality over the session-concurrency graph —
     // edges = distinct user pairs with overlapping sessions (q49's
-    // interval machinery), 10 rounds of the CC-style checkpointed
-    // join+agg loop. Oracle: the same 10 iterations unrolled as CTEs.
+    // interval machinery), 10 PageRank rounds. Oracle: the same 10
+    // iterations unrolled as CTEs.
     "q58_pagerank" -> ((s, dir) => {
       val sess = sessionTable(s, dir)
       val edges = graft.operators.IntervalJoin

@@ -215,7 +215,7 @@ object Workloads {
   }
 
   /** Forced-distributed PageRank over [[synthEdges]] — the BSP loop
-    * (out-degree join + contribution shuffle per round) at a scale
+    * (CSR blocks built once, one message shuffle per round) at a scale
     * where per-round orchestration stops mattering; scale-evidence
     * twin of [[dbscanSynth]] for the graph family. */
   def pagerankSynth(spark: SparkSession, m: Long, nodes: Long,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -55,8 +56,10 @@ object ConnectedComponents extends Serializable {
     * afterwards (not null), so an application's `setJobDescription` isn't
     * wiped by pipeline-internal actions, and nesting is safe. */
   private[operators] def withJobDesc[T](df: DataFrame, desc: String)(
+      f: => T): T = withJobDesc(df.sparkSession.sparkContext, desc)(f)
+
+  private[operators] def withJobDesc[T](sc: SparkContext, desc: String)(
       f: => T): T = {
-    val sc = df.sparkSession.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(desc)
     try f finally sc.setJobDescription(prev)

@@ -26,9 +26,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * endpoint, aggregate on the other); the normalizer attaches by
   * broadcast cross join of a scalar aggregate — no driver action
   * inside the loop; `localCheckpoint` per round cuts lineage exactly
-  * like the CC/PageRank loops. Below `localThreshold` edges the whole
+  * like the CC loop. Below `localThreshold` edges the whole
   * iteration runs fused in ONE task over primitive arrays
-  * ([[PageRank.runFused]]'s layout) — small graphs skip the ~10
+  * ([[Bsp.index]]'s layout) — small graphs skip the ~10
   * per-round jobs entirely.
   */
 object Hits {

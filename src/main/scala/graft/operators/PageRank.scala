@@ -5,11 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** PageRank over an edge table — graph centrality as an iterative
-  * DataFrame loop, reusing the exact execution shape of the engine's
-  * connected-components merge (SURVEY §2.4 C-3: iterate joins to a
-  * fixpoint, `localCheckpoint` each round to cut lineage — the Spark
-  * twin of the reference's interleaved merge rounds,
-  * `dbscan.cpp:847-1012`).
+  * bulk-synchronous loop, the Spark twin of the reference's interleaved
+  * merge rounds (`dbscan.cpp:847-1012`).
   *
   * Simple formulation: `r = (1-d)/N + d * Σ_in r(src)/outdeg(src)`,
   * uniform init 1/N, fixed iteration count. Dangling-node mass (nodes
@@ -17,22 +14,25 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * simplified variant explicitly so a SQL oracle can mirror it
   * term-for-term.
   *
-  * Scale: per iteration one join (edges ⋈ ranks on src — edges are
-  * partitioned by src once and cached, so only the rank table
-  * re-shuffles) and one aggregate (contributions by dst). No
-  * driver-side graph state; ranks never leave executors. Iteration
-  * count is the latency knob (10 ≈ the usual convergence budget).
+  * Scale: the distributed path runs in the Pregel shape of [[Bsp]]. The
+  * distinct edges are shuffled once into one CSR block per partition
+  * (partition count from the edge count, capped at `defaultParallelism`),
+  * with the message routes fixed at the same time; ranks are one
+  * `Array[Double]` per partition. Each round is one narrow pass that
+  * pre-sums contributions per target partition plus one shuffle of those
+  * arrays — no join, no aggregate, no checkpoint, no action. The whole
+  * iteration is one Spark job of about `iterations + 1` stages, run at
+  * the caller's sink; ranks never leave executors. For a fixed partition
+  * count the ranks are bit-identical run to run. Iteration count is the
+  * latency knob (10 ≈ the usual convergence budget).
   *
   * Like [[Dbscan.run]], a deduplicated edge set at or below
   * `localThreshold` takes a fused single-TASK path instead: the
   * iteration loop runs inside one `mapPartitions` over the
-  * already-distinct edges — primitive-array adjacency (node ids
-  * resolved by binary search over a sorted id array, never a boxed
-  * map), zero further shuffles, none of the per-round job latency
-  * that dominates small graphs. Both paths implement the same
-  * formula; results agree to float sum-order (spec-enforced), and
-  * the threshold bounds the task's transient memory at ~56 B/edge
-  * (≈ 280 MB at the 5M default).
+  * already-distinct edges — primitive-array adjacency ([[Bsp.index]]),
+  * zero further shuffles. Both paths implement the same formula; results
+  * agree to float sum-order (spec-enforced), and the threshold bounds the
+  * task's transient memory at ~56 B/edge (≈ 280 MB at the 5M default).
   */
 object PageRank {
 
@@ -43,20 +43,22 @@ object PageRank {
   /** @param edges directed edge table; duplicates are collapsed.
     * @param localThreshold max deduplicated edge count for the fused
     *   single-task path; 0 forces the distributed loop.
-    * @return (id, rank) for every node incident to an edge. */
+    * @return (id, rank) for every node incident to an edge. The fused
+    *   path's frame still reads the cached distinct edge set; the
+    *   distributed path's frame holds only its persisted CSR blocks (the
+    *   edge cache is released once they are built). The ContextCleaner
+    *   drops either with the frame. */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, damping: Double = 0.85,
       localThreshold: Long = 5_000_000L): DataFrame = {
     val (e, nEdges) = prepEdges(edges, srcCol, dstCol, iterations, damping)
-    if (nEdges <= localThreshold) runFused(e, iterations, damping)
-    else runDistributed(e, iterations, damping)
+    if (nEdges <= localThreshold) fused(e, None, iterations, damping)
+    else distributed(e, nEdges, None, iterations, damping)
   }
 
   /** Shared prolog for [[run]]/[[personalized]]: validate parameters,
     * normalize to a cached distinct (src, dst) long edge set, and
-    * materialize its count for the fused-vs-distributed dispatch.
-    * Cache lifecycle: released by the ContextCleaner with the plan,
-    * as in Dbscan.run — callers loop over SESSIONS, not operators. */
+    * materialize its count for the fused-vs-distributed dispatch. */
   private def prepEdges(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, damping: Double): (DataFrame, Long) = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
@@ -66,132 +68,43 @@ object PageRank {
     (e, e.count())
   }
 
-  /** Small-graph path: the whole iteration runs in ONE task over the
-    * (already shuffled-distinct, cached) edge list. */
-  private def runFused(e: DataFrame, iterations: Int,
-      damping: Double): DataFrame =
-    e.coalesce(1).mapPartitions { it =>
-      // primitive columns only — at the 5M-edge threshold a boxed
-      // tuple/map representation would cost hundreds of bytes per edge
-      val sb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val db = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => sb += r.getLong(0); db += r.getLong(1) }
-      val srcId = sb.result(); val dstId = db.result()
-      val m = srcId.length
-      if (m == 0) Iterator.empty
-      else {
-        // node table: sort + in-place dedup; id → index by binary search
-        val all = new Array[Long](2 * m)
-        System.arraycopy(srcId, 0, all, 0, m)
-        System.arraycopy(dstId, 0, all, m, m)
-        java.util.Arrays.sort(all)
-        var n = 0
-        var i = 0
-        while (i < all.length) {
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(all, n)
-        val src = new Array[Int](m)
-        val dst = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          src(i) = java.util.Arrays.binarySearch(ids, srcId(i))
-          dst(i) = java.util.Arrays.binarySearch(ids, dstId(i))
-          i += 1
-        }
-        val deg = new Array[Double](n)
-        src.foreach(s => deg(s) += 1.0)
-        var rank = Array.fill(n)(1.0 / n)
-        val base = (1.0 - damping) / n
-        for (_ <- 1 to iterations) {
-          val in = new Array[Double](n)
-          i = 0
-          while (i < m) {
-            in(dst(i)) += rank(src(i)) / deg(src(i)); i += 1
-          }
-          rank = Array.tabulate(n)(v => base + damping * in(v))
-        }
-        ids.iterator.zipWithIndex.map { case (id, j) => Row(id, rank(j)) }
-      }
-    }(Encoders.row(outSchema))
-
-  /** Personalized PageRank: the teleport vector concentrates on a seed
-    * set instead of spreading uniformly — "importance relative to THESE
-    * nodes" (a user's neighborhood, a labeled cohort, a topic's seed
-    * pages), the standard similarity/recommendation variant:
-    * `r = (1−d)·1{v∈S}/|S| + d · Σ_in r(src)/outdeg(src)`, r₀ = the
-    * teleport vector. Seeds outside the graph contribute nothing (|S|
-    * counts seeds incident to an edge); dangling mass is dropped,
-    * matching [[run]]'s stated simplification.
-    *
-    * Scale shape is [[run]]'s: the seed table joins the node table once
-    * (broadcast — a seed set is small by definition), and each round is
-    * the same join + aggregate + localCheckpoint. The fused small-graph
-    * path collects the seed ids into the one task — bounded by the
-    * node count, which the threshold already bounds.
-    *
-    * @param seeds one-column table of seed node ids.
-    * @return (id, rank) for every node incident to an edge. */
-  def personalized(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, iterations: Int,
-      damping: Double = 0.85,
-      localThreshold: Long = 5_000_000L): DataFrame = {
-    val (e, nEdges) = prepEdges(edges, srcCol, dstCol, iterations, damping)
-    val sd = seeds.select(col(seedCol).cast("long").as("sid")).distinct()
-    if (nEdges <= localThreshold) personalizedFused(e, sd, iterations,
-      damping)
-    else personalizedDistributed(e, sd, iterations, damping)
+  /** Initial rank and per-round teleport term of a node: uniform over all
+    * `n` nodes ([[run]]), or over the `nS` seed nodes ([[personalized]];
+    * an empty effective seed set teleports nowhere, so every rank is 0). */
+  private final case class Teleport(seeded: Boolean, n: Long, nS: Long,
+      damping: Double) {
+    private val seedMass = if (nS == 0) 0.0 else 1.0 / nS
+    def init(seed: Boolean): Double =
+      if (!seeded) 1.0 / n else if (seed) seedMass else 0.0
+    def base(seed: Boolean): Double =
+      if (!seeded) (1.0 - damping) / n
+      else if (seed) (1.0 - damping) * seedMass else 0.0
   }
 
-  private def personalizedFused(e: DataFrame, sd: DataFrame,
-      iterations: Int, damping: Double): DataFrame = {
-    // the graph fits one task, so the seed set (⊆ its nodes that
-    // matter) is driver-safe by the same bound — the naive-Bayes /
-    // IVF-literal-centroid stance on sub-threshold models
-    val seedIds = sd.collect().map(_.getLong(0))
-    java.util.Arrays.sort(seedIds)
+  /** Small-graph path: the whole iteration runs in ONE task over the
+    * (already shuffled-distinct, cached) edge list. `seedIds`: the sorted
+    * seed set of [[personalized]]. */
+  private def fused(e: DataFrame, seedIds: Option[Array[Long]],
+      iterations: Int, damping: Double): DataFrame =
     e.coalesce(1).mapPartitions { it =>
-      val sb = new scala.collection.mutable.ArrayBuilder.ofLong
-      val db = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => sb += r.getLong(0); db += r.getLong(1) }
-      val srcId = sb.result(); val dstId = db.result()
+      val (srcId, dstId) = Bsp.edgeArrays(it)
       val m = srcId.length
       if (m == 0) Iterator.empty
       else {
-        val all = new Array[Long](2 * m)
-        System.arraycopy(srcId, 0, all, 0, m)
-        System.arraycopy(dstId, 0, all, m, m)
-        java.util.Arrays.sort(all)
-        var n = 0
-        var i = 0
-        while (i < all.length) {
-          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(all, n)
-        val src = new Array[Int](m)
-        val dst = new Array[Int](m)
-        i = 0
-        while (i < m) {
-          src(i) = java.util.Arrays.binarySearch(ids, srcId(i))
-          dst(i) = java.util.Arrays.binarySearch(ids, dstId(i))
-          i += 1
-        }
-        val isSeed = ids.map(id =>
-          java.util.Arrays.binarySearch(seedIds, id) >= 0)
-        val nS = isSeed.count(identity)
+        val g = Bsp.index(srcId, dstId)
+        val (ids, src, dst) = (g.ids, g.ai, g.bi)
+        val n = ids.length
+        val isSeed = seedIds.fold(new Array[Boolean](n))(s =>
+          ids.map(java.util.Arrays.binarySearch(s, _) >= 0))
+        val tp = Teleport(seedIds.isDefined, n, isSeed.count(identity),
+          damping)
         val deg = new Array[Double](n)
         src.foreach(s => deg(s) += 1.0)
-        // an empty effective seed set has nothing to teleport to: all
-        // ranks are exactly 0 (the distributed path agrees)
-        val seedMass = if (nS == 0) 0.0 else 1.0 / nS
-        val base = Array.tabulate(n)(v =>
-          if (isSeed(v)) (1.0 - damping) * seedMass else 0.0)
-        var rank = Array.tabulate(n)(v => if (isSeed(v)) seedMass else 0.0)
+        val base = isSeed.map(tp.base)
+        var rank = isSeed.map(tp.init)
         for (_ <- 1 to iterations) {
           val in = new Array[Double](n)
-          i = 0
+          var i = 0
           while (i < m) {
             in(dst(i)) += rank(src(i)) / deg(src(i)); i += 1
           }
@@ -200,61 +113,62 @@ object PageRank {
         ids.iterator.zipWithIndex.map { case (id, j) => Row(id, rank(j)) }
       }
     }(Encoders.row(outSchema))
-  }
 
-  private def personalizedDistributed(e: DataFrame, sd: DataFrame,
-      iterations: Int, damping: Double): DataFrame = {
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .join(broadcast(sd), col("id") === col("sid"), "left")
-      .select(col("id"), col("sid").isNotNull.as("seed"))
-      .persist()
-    val nS = nodes.filter(col("seed")).count()
-    val seedMass = if (nS == 0) 0.0 else 1.0 / nS
-    val baseCol = when(col("seed"), lit((1.0 - damping) * seedMass))
-      .otherwise(lit(0.0))
-    val eDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .persist()
-    var ranks = nodes.select(col("id"),
-      when(col("seed"), lit(seedMass)).otherwise(lit(0.0)).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = eDeg.join(ranks, col("src") === col("id"))
-        .select(col("dst"), (col("rank") / col("deg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("m"))
-      ranks = nodes.join(contribs, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (baseCol + lit(damping) * coalesce(col("m"), lit(0.0)))
-            .as("rank"))
-        .localCheckpoint()
-    }
-    nodes.unpersist()
-    eDeg.unpersist()
-    ranks
-  }
-
-  /** Cluster-scale path: per-round join + aggregate, checkpointed. */
-  private def runDistributed(e: DataFrame, iterations: Int,
+  /** Cluster-scale path: [[Bsp]] rounds over CSR blocks. The edge cache
+    * is released once the blocks are built; `seeds` joins the graph once,
+    * at build time. */
+  private def distributed(e: DataFrame, nEdges: Long,
+      seeds: Option[DataFrame], iterations: Int,
       damping: Double): DataFrame = {
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().persist()
-    val n = math.max(nodes.count(), 1L)
-    // out-degree rides each edge row: groupBy(src) and the join back
-    // are co-partitioned (one shuffle), cached for every round
-    val eDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .persist()
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = eDeg.join(ranks, col("src") === col("id"))
-        .select(col("dst"), (col("rank") / col("deg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("m"))
-      ranks = nodes.join(contribs, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * coalesce(col("m"), lit(0.0))).as("rank"))
-        .localCheckpoint() // cut the per-round lineage, like the CC loop
+    val spark = e.sparkSession
+    val g = Bsp.build(e, seeds,
+      Bsp.partitions(nEdges, spark.sparkContext.defaultParallelism),
+      "pagerank: build graph")
+    e.unpersist()
+    val tp = Teleport(seeds.isDefined, g.nodes, g.marked, damping)
+    val rank = g.rounds(g.blocks.map(_.marked.map(tp.init)), iterations) {
+      (b, r) => Array.tabulate(b.size) { v =>
+        val d = b.outDegree(v)
+        if (d == 0) 0.0 else r(v) / d
+      }
+    } { (b, in) =>
+      Array.tabulate(b.size)(v => tp.base(b.marked(v)) + damping * in(v))
     }
-    nodes.unpersist()
-    eDeg.unpersist() // ranks are checkpointed — nothing depends on it now
-    ranks
+    spark.createDataFrame(g.rows(rank), outSchema)
+  }
+
+  /** Personalized PageRank: the teleport vector concentrates on a seed
+    * set instead of spreading uniformly — "importance relative to THESE
+    * nodes" (a user's neighborhood, a labeled cohort, a topic's seed
+    * pages), the standard similarity/recommendation variant:
+    * `r = (1−d)·1{v∈S}/|S| + d · Σ_in r(src)/outdeg(src)`, r₀ = the
+    * teleport vector. Seeds outside the graph contribute nothing (|S|
+    * counts seeds incident to an edge); NULL seeds are ignored; dangling
+    * mass is dropped, matching [[run]]'s stated simplification.
+    *
+    * Scale shape is [[run]]'s, with per-node init and teleport terms:
+    * the distributed path shuffles the seed ids into the graph build, so
+    * each block carries its nodes' seed flags and the rounds are
+    * [[run]]'s exactly — one shuffle each, no action. The fused
+    * small-graph path collects the seed ids into the one task — bounded
+    * by the node count, which the threshold already bounds. The returned
+    * frame holds the caches [[run]]'s does.
+    *
+    * @param seeds one-column table of seed node ids.
+    * @return (id, rank) for every node incident to an edge. */
+  def personalized(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: DataFrame, seedCol: String, iterations: Int,
+      damping: Double = 0.85,
+      localThreshold: Long = 5_000_000L): DataFrame = {
+    val (e, nEdges) = prepEdges(edges, srcCol, dstCol, iterations, damping)
+    val sd = seeds.select(col(seedCol).cast("long").as("sid"))
+      .where(col("sid").isNotNull).distinct()
+    if (nEdges <= localThreshold) {
+      // the graph fits one task, so the seed set (⊆ its nodes that
+      // matter) is driver-safe by the same bound
+      val seedIds = sd.collect().map(_.getLong(0))
+      java.util.Arrays.sort(seedIds)
+      fused(e, Some(seedIds), iterations, damping)
+    } else distributed(e, nEdges, Some(sd), iterations, damping)
   }
 }

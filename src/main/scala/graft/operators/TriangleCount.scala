@@ -67,7 +67,7 @@ object TriangleCount {
     * (already shuffled-distinct, cached) canonical edge list. */
   private def perNodeFused(ce: DataFrame): DataFrame =
     ce.coalesce(1).mapPartitions { it =>
-      // primitive columns only (same discipline as PageRank.runFused)
+      // primitive columns only (same discipline as PageRank.fused)
       val ub = new scala.collection.mutable.ArrayBuilder.ofLong
       val vb = new scala.collection.mutable.ArrayBuilder.ofLong
       it.foreach { r => ub += r.getLong(0); vb += r.getLong(1) }

@@ -107,18 +107,9 @@ class AnnSearchLocalSpec extends SparkSpec {
     // the final frame hides behind a localCheckpoint either way — the
     // honest fused-path evidence is the JOB count: size probe + the
     // single-task build materialization, nothing else
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     b.count() // warm the scan outside the counted window
-    spark.sparkContext.addSparkListener(listener)
-    AnnSearch.knnGraph(b, k = 5, iters = 2, buildK = 8)
-    Thread.sleep(500) // let the async listener bus drain
-    spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get <= 3, s"fused build should be ~2 jobs, ran ${jobs.get}")
+    val jobs = jobsDuring(AnnSearch.knnGraph(b, k = 5, iters = 2, buildK = 8))
+    assert(jobs <= 3, s"fused build should be ~2 jobs, ran $jobs")
   }
 
   test("retraction serve over a fused-built graph matches distributed") {

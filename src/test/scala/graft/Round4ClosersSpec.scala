@@ -49,6 +49,52 @@ class Round4ClosersSpec extends SparkSpec {
     assert(a == b)
   }
 
+  private lazy val pprGraph = {
+    val rnd = new scala.util.Random(9)
+    val edges = spark.createDataFrame(
+      (1 to 12000).map(_ => (rnd.nextInt(500).toLong, rnd.nextInt(500).toLong))
+        .filter(e => e._1 != e._2)).toDF("src", "dst")
+    val seeds = spark.createDataFrame(
+      (0 to 600 by 7).map(i => Tuple1(i.toLong))).toDF("sid")
+    (edges, seeds)
+  }
+
+  test("personalized distributed: job count independent of iterations") {
+    val (edges, seeds) = pprGraph
+    def jobs(iters: Int) = jobsDuring {
+      PageRank.personalized(edges, "src", "dst", seeds, "sid", iters,
+        localThreshold = 0L).collect()
+    }
+    val (j5, j20) = (jobs(5), jobs(20))
+    assert(j5 == j20, s"5 rounds ran $j5 jobs, 20 rounds ran $j20")
+  }
+
+  test("personalized distributed: bit-identical across runs; after " +
+      "round(8) identical across input partitionings and to fused") {
+    val (edges, seeds) = pprGraph
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def dist(e: org.apache.spark.sql.DataFrame) = PageRank.personalized(
+      e, "src", "dst", seeds, "sid", 10, localThreshold = 0L)
+    assert(ranks(dist(edges)) == ranks(dist(edges)))
+    def rounded(df: org.apache.spark.sql.DataFrame) =
+      ranks(df.select(col("id"), round(col("rank"), 8)))
+    val fused = rounded(PageRank.personalized(edges, "src", "dst", seeds,
+      "sid", 10))
+    for (p <- Seq(1, 3, 7))
+      assert(rounded(dist(edges.repartition(p))) == fused,
+        s"input in $p partitions")
+  }
+
+  test("personalized: an empty edge table gives an empty result") {
+    val none = spark.createDataFrame(Seq.empty[(Long, Long)])
+      .toDF("src", "dst")
+    val seeds = spark.createDataFrame(Seq(Tuple1(1L))).toDF("sid")
+    for (t <- Seq(5_000_000L, -1L))
+      assert(PageRank.personalized(none, "src", "dst", seeds, "sid", 3,
+        localThreshold = t).collect().isEmpty)
+  }
+
   test("frequentTriples: hand baskets, both prune levels lossless") {
     val rows = Seq(
       (1L, 1L), (1L, 2L), (1L, 3L),
